@@ -296,12 +296,17 @@ def audit_registry(spark, sf_dir: str) -> dict[str, list[str]]:
             hits.extend(broadcastable_smj_joins(df))
         return name, hits
 
-    # r16 (VERDICT r15 item 1, guide §2.6): the audit is pure
+    # r16 (VERDICT r15 item 1, guide §2.6): the audit is mostly
     # driver-side planning — DataFrame builds + Catalyst explainString,
     # all py4j calls that release the GIL — and the registry's ~300
     # entries are independent, so a small thread pool parallelizes it
-    # for real. pool.map preserves registry order; the verdict is the
-    # same dict a sequential walk produced.
+    # for real. Not purely planning: with AQE on, building the frames
+    # pinned by the lazy localCheckpoints in queries/vectors.py runs
+    # Spark jobs for their upstream stages, so the pool also runs real
+    # jobs concurrently, and the audit sees those frames only from the
+    # pin down (their plans start at the checkpoint's RDD scan).
+    # pool.map preserves registry order; the verdict is the same dict a
+    # sequential walk produced.
     from concurrent.futures import ThreadPoolExecutor
 
     bad: dict[str, list[str]] = {}

@@ -176,9 +176,10 @@ def q115_kafka_json_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q128_kafka_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BATCH kafka sink under the gate (§2.1 ``to_kafka``): events
-    are produced through the ``to_kafka_spool`` DataSourceWriter — every
-    Spark partition's task writes its own log, published only by the
-    driver's atomic commit rename — then streamed back through the
+    are produced through ``to_kafka`` (the kafka_spool DataSourceWriter
+    behind a ``spool://`` bootstrap) — every Spark partition's task
+    writes its own log, published only by the driver's atomic commit
+    rename — then streamed back through the
     partitioned source and graded on TOTALS (record count, payload
     bytes, distinct keys, ts range). Totals are partition-layout
     independent, which is exactly what the sink guarantees: the log↔
@@ -188,8 +189,7 @@ def q128_kafka_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
-    from pandas_streaming_spark.sources import kafka
-    from pandas_streaming_spark.sources.kafka_spool import to_kafka_spool
+    from pandas_streaming_spark.sources import kafka, to_kafka
     from pandas_streaming_spark.streaming.replay import SCRATCH
 
     ev = load_table(spark, sf_dir, "events")
@@ -201,14 +201,14 @@ def q128_kafka_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool = os.path.join(SCRATCH, f"kspool-{key}")
     marker = os.path.join(spool, "_OK")
     if not os.path.exists(marker):
-        to_kafka_spool(
+        to_kafka(
             ev.select(
                 F.col("user_id").cast("string").alias("key"),
                 F.col("event_type").alias("value"),
                 F.unix_millis("ts").alias("ts_ms"),
             ).repartition(4),
             "events_sink",
-            spool,
+            "spool://" + spool,
         )
         with open(marker, "w") as f:
             f.write("ok")

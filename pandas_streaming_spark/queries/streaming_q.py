@@ -136,13 +136,6 @@ def _final(
     stream = replay_events(
         spark, sf_dir, replay_dir, max_files_per_trigger=max_files_per_trigger
     )
-    # one micro-batch per split file (maxFilesPerTrigger=1): the last
-    # batch id is known, so complete-mode runs skip the k-1 redundant
-    # full-state rewrites (run_stream_to_df final_batch_id fast path)
-    import glob as _glob
-    import os as _os
-
-    n_files = len(_glob.glob(_os.path.join(replay_dir, "batch_*.parquet")))
     return run_stream_to_df(
         spark, transform(stream), output_mode, key_cols,
         state_partitions=(
@@ -152,7 +145,6 @@ def _final(
             if max_files_per_trigger is not None
             else CATCHUP_STATE_PARTITIONS
         ),
-        final_batch_id=(n_files - 1) if output_mode == "complete" else None,
     )
 
 
@@ -768,7 +760,7 @@ def q303_stream_ingest_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_unique_pass"),
         F.sum("__n").alias("n_tokens"),
     )
-    out = run_stream_to_df(spark, agg, "complete", final_batch_id=4)
+    out = run_stream_to_df(spark, agg, "complete")
     return out.select(
         "source",
         F.col("n_unique_pass").cast("long").alias("n_unique_pass"),

@@ -4,9 +4,16 @@ re-expressed as Structured Streaming readers.
 Reference -> here:
 - ``from_textfile(path)`` / ``filenames(path)``  -> text_dir / file_stream
   (directory-granular tailing; ``input_file_name()`` exposes the name)
-- ``from_kafka(_batched)``                       -> kafka (declared; no
-  broker in the sandbox — checkpointed offsets give exactly-once, a
-  strict upgrade over the reference's ref-counted at-least-once)
+- ``from_kafka(_batched)`` / ``to_kafka``        -> kafka / to_kafka
+  (the connector's option map; a ``spool://<dir>`` bootstrap runs it on
+  the kafka_spool broker emulation without a broker or jar —
+  checkpointed offsets give exactly-once, a strict upgrade over the
+  reference's ref-counted at-least-once)
+- ``from_process`` / ``from_http_server`` /
+  ``from_websocket`` / ``from_mqtt``             -> pystream sources:
+  commands or local endpoints append lines to spool logs, read by the
+  one spool-log reader (kafka_spool.SpoolStreamReader) that also serves
+  kafka_spool; ``batch_size`` is records per trigger across all logs
 - ``from_tcp(port)``                             -> socket_lines
 - ``from_iterable(it)``                          -> from_iterable (batch)
   / streaming via the replay protocol (streaming.replay)
@@ -88,13 +95,29 @@ def kafka_options(
     }
 
 
-def _require_kafka(spark: SparkSession, err: Exception):
-    if "kafka" in str(err).lower() or "DATA_SOURCE_NOT_FOUND" in str(err):
+def _require_kafka(err: Exception, fmt: str):
+    if fmt == "kafka" and (
+        "kafka" in str(err).lower() or "DATA_SOURCE_NOT_FOUND" in str(err)
+    ):
         raise RuntimeError(
             "the Kafka connector is not on the classpath; launch with "
             f"spark.jars.packages={KAFKA_PACKAGE}:<spark-version>"
         ) from err
     raise err
+
+
+def _kafka_format(spark: SparkSession, bootstrap_servers: str) -> str:
+    """``kafka_spool`` (registered on first use) for a ``spool://<dir>``
+    bootstrap, else the real connector's ``kafka``."""
+    from pandas_streaming_spark.sources.kafka_spool import (
+        SPOOL_PREFIX,
+        KafkaSpoolDataSource,
+    )
+
+    if not bootstrap_servers.startswith(SPOOL_PREFIX):
+        return "kafka"
+    spark.dataSource.register(KafkaSpoolDataSource)
+    return "kafka_spool"
 
 
 def kafka(
@@ -108,29 +131,19 @@ def kafka(
     offsets for exactly-once processing — a strict upgrade over the
     reference's ref-counted at-least-once delivery.
 
-    A ``spool://<dir>`` bootstrap routes to the kafka_spool broker
-    emulation (same option contract and output schema, partitioned
-    executor-side reads) so kafka-facing queries run and replay in the
-    sandbox; a real ``host:port`` bootstrap needs the connector jar and
+    A ``spool://<dir>`` bootstrap reads the same option map through
+    ``format("kafka_spool")`` (same output schema, partitioned
+    executor-side reads) so kafka-facing queries run and replay without a
+    broker; a real ``host:port`` bootstrap needs the connector jar and
     raises an actionable error without it."""
-    if bootstrap_servers.startswith("spool://"):
-        from pandas_streaming_spark.sources.kafka_spool import from_kafka_spool
-
-        m = extra.get("maxOffsetsPerTrigger")
-        return from_kafka_spool(
-            spark,
-            topics,
-            bootstrap_servers[len("spool://") :],
-            starting_offsets,
-            int(m) if m else None,
-        )
-    r = spark.readStream.format("kafka")
-    for k, v in kafka_options(topics, bootstrap_servers, starting_offsets, **extra).items():
-        r = r.option(k, v)
+    fmt = _kafka_format(spark, bootstrap_servers)
+    r = spark.readStream.format(fmt).options(
+        **kafka_options(topics, bootstrap_servers, starting_offsets, **extra)
+    )
     try:
         return r.load()
     except Exception as e:  # surface the fix, not a bare class-not-found
-        _require_kafka(spark, e)
+        _require_kafka(e, fmt)
 
 
 def to_kafka(
@@ -142,13 +155,13 @@ def to_kafka(
     """Kafka sink (reference ``to_kafka``): expects ``value`` (and
     optionally ``key``) binary/string columns. Streaming frames get an
     exactly-once writeStream with checkpointing; batch frames a one-shot
-    write. A ``spool://<dir>`` bootstrap routes batch frames to the
-    kafka_spool emulated producer (per-partition logs, task-side writes,
-    driver-commit rename)."""
-    if bootstrap_servers.startswith("spool://") and not df.isStreaming:
-        from pandas_streaming_spark.sources.kafka_spool import to_kafka_spool
-
-        return to_kafka_spool(df, topic, bootstrap_servers[len("spool://") :])
+    write. A batch frame with a ``spool://<dir>`` bootstrap writes
+    through ``format("kafka_spool")`` (per-partition logs, task-side
+    writes, driver-commit rename)."""
+    fmt = (
+        "kafka" if df.isStreaming
+        else _kafka_format(df.sparkSession, bootstrap_servers)
+    )
     try:
         if df.isStreaming:
             w = (
@@ -160,13 +173,14 @@ def to_kafka(
                 w = w.option("checkpointLocation", checkpoint_dir)
             return w.start()
         return (
-            df.write.format("kafka")
+            df.write.format(fmt)
             .option("kafka.bootstrap.servers", bootstrap_servers)
             .option("topic", topic)
+            .mode("append")
             .save()
         )
     except Exception as e:
-        _require_kafka(df.sparkSession, e)
+        _require_kafka(e, fmt)
 
 
 def from_iterable(spark: SparkSession, rows, schema) -> DataFrame:

@@ -1,30 +1,35 @@
-"""Kafka-shaped source/sink over a durable file spool (SURVEY.md §2.1
-``from_kafka`` / ``to_kafka`` — runnable form).
+"""The spool log and its one stream reader, plus the Kafka-shaped
+source/sink over it (SURVEY.md §2.1 ``from_kafka`` / ``to_kafka`` —
+runnable form).
 
-The real Kafka connector needs a broker and a JVM jar, neither of which
-exists in the sandbox — but the *contract* a user programs against is
-just (a) the option map (``kafka.bootstrap.servers`` / ``subscribe`` /
-``startingOffsets``) and (b) the 7-column output schema (key, value,
-topic, partition, offset, timestamp, timestampType). This module speaks
-both over a broker emulation the sandbox CAN run: each topic is a
-directory of append-only partition logs, offsets are record indexes into
-a log, and a record is one base64 ``key\\tvalue\\tts_ms`` line (binary-
-safe, newline-framed, committed iff newline-terminated — the same
-durable-spool rule every pystream source uses).
+A spool log is an append-only file of newline-framed records: a line is
+committed iff it is newline-terminated (a crashed writer's partial tail
+stays invisible until finished), and a log's offset is its count of
+committed lines. That makes every source over spool logs replayable from
+offsets, which Structured Streaming needs for exactly-once recovery.
+``SpoolStreamReader`` is the one reader of such logs; ``kafka_spool``
+here and ``process_stream`` / ``process_pool_stream`` (``pystream``)
+differ only in their log set, row decoder, schema and the commands they
+spawn. The driver only plans (log, start, end) slices; reading and
+decoding run in executor tasks, one per log with new lines. Tasks open
+the logs by path, so executors must share the driver's filesystem —
+true of ``local[N]`` and ``local-cluster``.
 
-Unlike those sources this one is a full *partitioned*
-``DataSourceStreamReader``: the driver only plans (topic-partition,
-start, end) slices; the record decoding runs in executor tasks, one per
-Kafka partition — the same parallelism shape as the real connector, and
-the scale-out exemplar the r3 driver-side simple readers deliberately
-weren't. The batch sink is a Python ``DataSourceWriter`` whose tasks
-write per-Spark-partition logs and publish via tmp-file + driver-commit
-rename — a task retry can never leave a half-written or duplicate log.
+The real Kafka connector needs a broker and a JVM jar, but the contract
+a user programs against is just (a) the option map
+(``kafka.bootstrap.servers`` / ``subscribe`` / ``startingOffsets`` /
+``maxOffsetsPerTrigger``) and (b) the 7-column output schema (key,
+value, topic, partition, offset, timestamp, timestampType). This module
+speaks both over a broker emulation: each topic is a directory of
+partition logs, and a record is one base64 ``key\\tvalue\\tts_ms``
+line (binary-safe). The batch sink is a Python ``DataSourceWriter``
+whose tasks write per-Spark-partition logs and publish via tmp-file +
+driver-commit rename — a task retry can never leave a half-written or
+duplicate log.
 
 ``sources.kafka()`` / ``to_kafka()`` route ``spool://<dir>`` bootstrap
-strings here, so one call site serves both the sandbox and a real
-cluster. At 100 TB you run the real connector; this path's job is to
-make every kafka-facing query testable and replay-exact without one.
+strings to ``format("kafka_spool")`` with the connector's option map, so
+one call site serves both the sandbox and a real cluster.
 """
 
 from __future__ import annotations
@@ -32,11 +37,12 @@ from __future__ import annotations
 import base64
 import glob
 import os
+import subprocess
 import uuid
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -54,19 +60,18 @@ KAFKA_SCHEMA = (
 SPOOL_PREFIX = "spool://"
 
 
-def _topic_logs(spool_dir: str, topic: str) -> list[str]:
-    """Sorted partition logs of a topic; index in this list IS the
-    partition id (producers name files p{..} so sort order is write
-    order)."""
-    return sorted(glob.glob(os.path.join(spool_dir, topic, "*.log")))
-
-
 def _complete_lines(path: str) -> list[bytes]:
     with open(path, "rb") as f:
         data = f.read()
     # newline-terminated lines only: a crashed writer's partial tail
     # line stays invisible until finished
     return data.split(b"\n")[:-1] if data else []
+
+
+def _committed(path: str) -> int:
+    """Offset of the end of a log: its count of committed lines."""
+    with open(path, "rb") as f:
+        return f.read().count(b"\n")
 
 
 def _decode(line: bytes, topic: str, pid: int, offset: int):
@@ -88,89 +93,148 @@ def encode_record(key: bytes | None, value: bytes, ts_ms: int) -> bytes:
     )
 
 
+def _split_cap(cap: int, backlogs: list[int]) -> list[int]:
+    """Records each log offers this trigger under a per-trigger ``cap``.
+
+    Everything while the total backlog fits. Otherwise exactly ``cap``:
+    every log with a backlog first gets one record (in log order, while
+    the cap lasts), so no log starves behind a larger one — the Kafka
+    connector's rule for shares below one record. The rest of the cap is
+    split in proportion to the remaining backlogs: each log the floor of
+    its share, and the remainder one record at a time in log order.
+    """
+    if sum(backlogs) <= cap:
+        return list(backlogs)
+    take = [0] * len(backlogs)
+    budget = cap
+    for i, b in enumerate(backlogs):
+        if b and budget:
+            take[i], budget = 1, budget - 1
+    rest = [b - t for b, t in zip(backlogs, take)]
+    total = sum(rest)  # > budget, because the backlogs exceed the cap
+    for i, r in enumerate(rest):
+        take[i] += budget * r // total
+    left = cap - sum(take)  # fewer than the logs with a fractional share
+    for i in range(len(take)):
+        if left and take[i] < backlogs[i]:
+            take[i], left = take[i] + 1, left - 1
+    return take
+
+
 @dataclass
 class _LogSlice(InputPartition):
-    """One (topic-partition, offset range) read task — picklable, shipped
-    to executors."""
+    """One (log, offset range) read task — picklable, shipped to
+    executors. ``pid`` is the log's index in its group."""
 
     path: str
-    topic: str
+    group: str
     pid: int
     start: int
     end: int
 
 
-class _KafkaSpoolStreamReader(DataSourceStreamReader):
-    """Partitioned stream reader: offsets are ``{topic: {log_basename:
-    next_record}}`` (basename-keyed so a log added between triggers can't
-    renumber committed ranges)."""
+class SpoolStreamReader(DataSourceStreamReader):
+    """Partitioned stream reader over groups of spool logs.
 
-    def __init__(self, spool_dir: str, topics: list[str], starting: str,
-                 max_per_trigger: int | None):
-        self._dir = spool_dir
-        self._topics = topics
-        self._starting = starting
+    ``logs`` maps an offset group (a Kafka topic, or ``"lines"`` for the
+    process sources) to the glob of its logs; a log's partition id is its
+    index in the sorted glob. Offsets are ``{group: {log_basename:
+    committed_lines}}`` (basename-keyed, so a log added between triggers
+    cannot renumber committed ranges). ``decode(line, group, pid,
+    offset)`` turns one committed line into a row, in the executor task.
+
+    ``max_per_trigger`` caps the records one trigger offers across all
+    logs (``_split_cap``). ``cmds`` are ``(argv, log)`` pairs, spawned
+    once on the driver with stdout appended to ``log``; ``stop()``
+    terminates them.
+    """
+
+    def __init__(
+        self,
+        logs: dict[str, str],
+        decode: Callable[[bytes, str, int, int], tuple],
+        max_per_trigger: int | None = None,
+        starting: str = "earliest",
+        cmds: Sequence[tuple[list[str], str]] = (),
+    ):
+        self._logs = logs
+        self._decode = decode
         self._max = max_per_trigger
+        self._starting = starting
+        self._cmds = cmds
+        self._procs: list | None = None
+        self._initial: dict | None = None
+        # end of the last trigger Spark planned = start of the next one
+        self._planned: dict | None = None
 
-    def _snapshot(self) -> dict:
+    def _spawn(self) -> None:
+        if self._procs is not None:
+            return
+        self._procs = []
+        for argv, log in self._cmds:
+            os.makedirs(os.path.dirname(log) or ".", exist_ok=True)
+            with open(log, "ab") as out:
+                self._procs.append(
+                    subprocess.Popen(argv, stdout=out, stderr=subprocess.DEVNULL)
+                )
+
+    def _paths(self, group: str) -> list[str]:
+        return sorted(glob.glob(self._logs[group]))
+
+    def _counts(self) -> dict:
+        self._spawn()
         return {
-            t: {
-                os.path.basename(p): len(_complete_lines(p))
-                for p in _topic_logs(self._dir, t)
-            }
-            for t in self._topics
+            g: {os.path.basename(p): _committed(p) for p in self._paths(g)}
+            for g in self._logs
         }
 
     def initialOffset(self) -> dict:
-        if self._starting == "latest":
-            return self._snapshot()
-        return {
-            t: {os.path.basename(p): 0 for p in _topic_logs(self._dir, t)}
-            for t in self._topics
-        }
+        if self._initial is None:
+            counts = self._counts()
+            if self._starting != "latest":
+                counts = {g: dict.fromkeys(c, 0) for g, c in counts.items()}
+            self._initial = counts
+        return self._initial
 
     def latestOffset(self) -> dict:
-        latest = self._snapshot()
-        if self._max is None:
-            return latest
-        # admission control (maxOffsetsPerTrigger parity): cap TOTAL new
-        # records offered per trigger. The reader is driver-instantiated
-        # once per run, so "previously offered" state lives on self,
-        # seeded from the starting position.
-        prev = getattr(self, "_last_offered", None) or self.initialOffset()
-        budget = self._max
-        capped: dict = {}
-        for t, parts in latest.items():
-            capped[t] = {}
-            for name, n in parts.items():
-                base = prev.get(t, {}).get(name, 0)
-                take = min(max(n - base, 0), max(budget, 0))
-                capped[t][name] = base + take
-                budget -= take
-        self._last_offered = capped
-        return capped
+        # a function of the logs and the last planned trigger only: Spark
+        # may call it more than once before it plans the next trigger
+        latest = self._counts()
+        if self._max is not None:
+            start = self._planned if self._planned is not None else self.initialOffset()
+            keys = [(g, n) for g, c in latest.items() for n in c]
+            base = [start.get(g, {}).get(n, 0) for g, n in keys]
+            take = _split_cap(
+                self._max,
+                [max(latest[g][n] - b, 0) for (g, n), b in zip(keys, base)],
+            )
+            for (g, n), b, t in zip(keys, base, take):
+                latest[g][n] = b + t
+        return latest
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        self._planned = end
         out = []
-        for t, parts in end.items():
-            logs = {os.path.basename(p): p for p in _topic_logs(self._dir, t)}
-            names = sorted(logs)
-            for name, hi in parts.items():
-                lo = start.get(t, {}).get(name, 0)
+        for g, ends in end.items():
+            paths = self._paths(g)
+            names = [os.path.basename(p) for p in paths]
+            for name, hi in ends.items():
+                lo = start.get(g, {}).get(name, 0)
                 if hi > lo:
-                    out.append(
-                        _LogSlice(logs[name], t, names.index(name), lo, hi)
-                    )
+                    pid = names.index(name)
+                    out.append(_LogSlice(paths[pid], g, pid, lo, hi))
         return out
 
     def read(self, partition: _LogSlice) -> Iterator[tuple]:
         # executor-side: decode exactly the committed slice
-        lines = _complete_lines(partition.path)[partition.start : partition.end]
-        for j, line in enumerate(lines, partition.start):
-            yield _decode(line, partition.topic, partition.pid, j)
+        s = partition
+        for off, line in enumerate(_complete_lines(s.path)[s.start : s.end], s.start):
+            yield self._decode(line, s.group, s.pid, off)
 
-    def commit(self, end: dict) -> None:
-        pass  # the spool is the log; nothing to prune at test scale
+    def stop(self) -> None:
+        for p in self._procs or []:
+            if p.poll() is None:
+                p.terminate()
 
 
 @dataclass
@@ -224,9 +288,10 @@ class _KafkaSpoolWriter(DataSourceWriter):
 
 class KafkaSpoolDataSource(DataSource):
     """``format("kafka_spool")`` — options mirror the Kafka connector:
-    ``kafka.bootstrap.servers`` (``spool://<dir>``, or pass ``spool_dir``
-    directly), ``subscribe`` (comma topics), ``startingOffsets``
-    (earliest|latest), ``maxOffsetsPerTrigger``; the sink adds ``topic``."""
+    ``kafka.bootstrap.servers`` (``spool://<dir>``), ``subscribe`` (comma
+    topics), ``startingOffsets`` (earliest|latest),
+    ``maxOffsetsPerTrigger`` (records per trigger across all partitions
+    of all subscribed topics); the sink adds ``topic``."""
 
     @classmethod
     def name(cls) -> str:
@@ -234,64 +299,26 @@ class KafkaSpoolDataSource(DataSource):
 
     def _spool_dir(self) -> str:
         boot = self.options.get("kafka.bootstrap.servers", "")
-        if boot.startswith(SPOOL_PREFIX):
-            return boot[len(SPOOL_PREFIX) :]
-        d = self.options.get("spool_dir", "")
-        if not d:
-            raise ValueError(
-                "kafka_spool needs kafka.bootstrap.servers=spool://<dir> "
-                "or spool_dir=<dir>"
-            )
-        return d
+        if not boot.startswith(SPOOL_PREFIX):
+            raise ValueError("kafka_spool needs kafka.bootstrap.servers=spool://<dir>")
+        return boot[len(SPOOL_PREFIX) :]
 
     def schema(self) -> str:
         return KAFKA_SCHEMA
 
-    def streamReader(self, schema) -> _KafkaSpoolStreamReader:
+    def streamReader(self, schema) -> SpoolStreamReader:
+        d = glob.escape(self._spool_dir())
+        topics = [t.strip() for t in self.options["subscribe"].split(",") if t.strip()]
         m = self.options.get("maxoffsetspertrigger")
-        return _KafkaSpoolStreamReader(
-            self._spool_dir(),
-            [t.strip() for t in self.options["subscribe"].split(",") if t.strip()],
-            self.options.get("startingoffsets", "earliest"),
+        return SpoolStreamReader(
+            {t: os.path.join(d, glob.escape(t), "*.log") for t in topics},
+            _decode,
             int(m) if m else None,
+            self.options.get("startingoffsets", "earliest"),
         )
 
     def writer(self, schema, overwrite: bool) -> _KafkaSpoolWriter:
         return _KafkaSpoolWriter(self._spool_dir(), self.options["topic"])
-
-
-def from_kafka_spool(
-    spark: SparkSession,
-    topics: str,
-    spool_dir: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming DataFrame over spooled topics with the Kafka output
-    schema. ``sources.kafka()`` routes ``spool://`` bootstraps here."""
-    spark.dataSource.register(KafkaSpoolDataSource)
-    r = (
-        spark.readStream.format("kafka_spool")
-        .option("kafka.bootstrap.servers", SPOOL_PREFIX + spool_dir)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        r = r.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return r.load()
-
-
-def to_kafka_spool(df: DataFrame, topic: str, spool_dir: str) -> None:
-    """Batch-produce ``df`` (columns ``value`` [, ``key``, ``ts_ms``]) —
-    each Spark partition becomes one partition log, written task-side."""
-    df.sparkSession.dataSource.register(KafkaSpoolDataSource)
-    (
-        df.write.format("kafka_spool")
-        .option("kafka.bootstrap.servers", SPOOL_PREFIX + spool_dir)
-        .option("topic", topic)
-        .mode("append")
-        .save()
-    )
 
 
 def produce_distributed(
@@ -310,8 +337,8 @@ def produce_distributed(
     table to the driver (VERDICT r4 item 4) — the only driver-side
     materialization is the |partitions|-row write summary.
 
-    ``to_kafka_spool`` remains the general sink (one log per Spark
-    partition); this one is for when the caller dictates the
+    ``to_kafka`` with a ``spool://`` bootstrap remains the general sink
+    (one log per Spark partition); this one is for when the caller dictates the
     partition-id → records mapping, like a keyed Kafka producer does.
     """
     import pandas as pd

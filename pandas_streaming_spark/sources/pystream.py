@@ -1,29 +1,46 @@
 """Python-native streaming sources (Spark 4 DataSource API).
 
-The reference's ``from_iterable`` emits a finite in-memory sequence as a
-stream; its file/kafka sources cover everything durable. Spark 4's Python
-``DataSource`` API lets us express the in-memory case as a *real*
-Structured Streaming source — offsets, recovery replay, any trigger —
-instead of bouncing through the file-replay fixture.
+``from_iterable_stream`` expresses the reference's ``from_iterable`` (a
+finite in-memory sequence) as a *real* Structured Streaming source —
+offsets, recovery replay, any trigger — through a driver-side simple
+reader: the data IS an in-process iterable, so its job is API parity and
+testing, not throughput.
 
-Scale honesty: like the reference's version this is a driver-side source
-(the data IS an in-process iterable); its job is API parity and testing,
-not throughput. Durable inputs belong on the file/kafka paths.
+Every other source here writes lines to a durable spool log and reads it
+back through ``kafka_spool.SpoolStreamReader``, the one spool-log reader:
+``from_process_stream`` (one command, one log), ``from_process_pool``
+(N commands, N logs) and the ``from_http_server`` / ``from_websocket`` /
+``from_mqtt`` endpoints, which append each message to the spool before
+acknowledging it. Offsets are committed (newline-terminated) line counts,
+so acknowledged data replays exactly-once after a restart, which a pipe
+or socket buffer cannot promise. The driver plans one slice per log with
+new lines and executor tasks read and decode them, so executors must
+share the driver's filesystem — true of ``local[N]`` and
+``local-cluster``, the same assumption ``kafka_spool`` makes.
+``batch_size`` is the number of lines one trigger reads across all logs
+of the source, split in proportion to each log's backlog.
+
+Commands and endpoints live on the driver (they are the ingest edge);
+durable high-volume inputs belong on the file/kafka paths.
 """
 
 from __future__ import annotations
 
+import base64
+import glob
+import hashlib
 import json
 import logging
+import os
+import socket
+import threading
 from collections.abc import Iterator
+from http.server import BaseHTTPRequestHandler
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+from pandas_streaming_spark.sources.kafka_spool import SpoolStreamReader
 
 
 class _IterableStreamReader(SimpleDataSourceStreamReader):
@@ -80,71 +97,19 @@ def from_iterable_stream(
     )
 
 
-class _ProcessStreamReader(SimpleDataSourceStreamReader):
-    """Stream the stdout lines of a subprocess.
+def _line_row(line: bytes, group: str, pid: int, offset: int) -> tuple:
+    return (offset, line.decode("utf-8", errors="replace"))
 
-    The process is spawned ONCE with stdout redirected to a spool file;
-    the spool — not the pipe — is the source of truth. Offsets are line
-    counts into the spool, so ``readBetweenOffsets`` re-reads the exact
-    committed slice and a restarted query replays byte-identical
-    micro-batches (a raw pipe cannot be re-read; the spool is what makes
-    this source exactly-once instead of at-most-once).
 
-    SimpleDataSourceStreamReader runs on the driver, which is where the
-    subprocess lives — same locality story as the reference's
-    ``from_process``. Durable high-volume inputs belong on file/kafka.
-    """
-
-    def __init__(self, spool: str, cmd_json: str, batch_size: int):
-        self._spool = spool
-        self._cmd = (json.loads(cmd_json) if cmd_json else None) or None
-        self._bs = batch_size
-        self._proc = None
-
-    def _ensure_started(self) -> None:
-        import os
-        import subprocess
-
-        if self._proc is not None or self._cmd is None:
-            return
-        os.makedirs(os.path.dirname(self._spool), exist_ok=True)
-        out = open(self._spool, "ab")
-        self._proc = subprocess.Popen(self._cmd, stdout=out, stderr=subprocess.DEVNULL)
-
-    def _complete_lines(self) -> list[str]:
-        import os
-
-        if not os.path.exists(self._spool):
-            return []
-        with open(self._spool, "rb") as f:
-            data = f.read()
-        if not data:
-            return []
-        # only lines terminated by \n are committed — a partially-written
-        # tail line is invisible until the writer finishes it
-        return data.decode("utf-8", errors="replace").split("\n")[:-1]
-
-    def initialOffset(self) -> dict:
-        return {"line": 0}
-
-    def read(self, start: dict):
-        self._ensure_started()
-        i = start["line"]
-        lines = self._complete_lines()
-        chunk = lines[i : i + self._bs]
-        return iter([(i + j, s) for j, s in enumerate(chunk)]), {"line": i + len(chunk)}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        lines = self._complete_lines()
-        return iter(
-            [(j, s) for j, s in enumerate(lines[start["line"] : end["line"]], start["line"])]
-        )
+def _worker_row(line: bytes, group: str, pid: int, offset: int) -> tuple:
+    return (pid, offset, line.decode("utf-8", errors="replace"))
 
 
 class ProcessDataSource(DataSource):
     """``format("process_stream")``: options are ``spool`` (line log
-    path), optional ``cmd`` (JSON argv list to spawn; omit to tail a
-    spool another writer owns) and ``batch_size``."""
+    path), optional ``cmd`` (JSON argv list to spawn with stdout appended
+    to the spool; omit to tail a spool another writer owns) and
+    ``batch_size`` (lines per trigger)."""
 
     @classmethod
     def name(cls) -> str:
@@ -153,11 +118,14 @@ class ProcessDataSource(DataSource):
     def schema(self) -> str:
         return "line_no long, value string"
 
-    def simpleStreamReader(self, schema) -> _ProcessStreamReader:
-        return _ProcessStreamReader(
-            self.options["spool"],
-            self.options.get("cmd", ""),
+    def streamReader(self, schema) -> SpoolStreamReader:
+        spool = self.options["spool"]
+        cmd = json.loads(self.options.get("cmd") or "[]")
+        return SpoolStreamReader(
+            {"lines": glob.escape(spool)},
+            _line_row,
             int(self.options.get("batch_size", "100")),
+            cmds=[(cmd, spool)] if cmd else [],
         )
 
 
@@ -168,9 +136,15 @@ def from_process_stream(
     batch_size: int = 100,
 ) -> DataFrame:
     """Streaming DataFrame of a subprocess's stdout lines (reference
-    ``from_process``): columns ``(line_no long, value string)``. ``spool``
-    must be a fresh path per logical stream — it is the durable log the
-    offsets index into."""
+    ``from_process``): columns ``(line_no long, value string)``, at most
+    ``batch_size`` lines per trigger.
+
+    The process is spawned once, on the driver, with stdout appended to
+    ``spool``; the spool — not the pipe — is the source of truth, so a
+    restarted query replays byte-identical micro-batches (a raw pipe
+    cannot be re-read). ``spool`` must be a fresh path per logical
+    stream; pass an empty ``cmd`` to tail a spool another writer owns.
+    The process is terminated when the query stops."""
     spark.dataSource.register(ProcessDataSource)
     return (
         spark.readStream.format("process_stream")
@@ -181,115 +155,10 @@ def from_process_stream(
     )
 
 
-class _WorkerSlice(InputPartition):
-    """Picklable (worker log, line range) read task for the partitioned
-    process source."""
-
-    def __init__(self, worker: int, path: str, start: int, end: int):
-        self.worker = worker
-        self.path = path
-        self.start = start
-        self.end = end
-
-
-class _ProcessPoolStreamReader(DataSourceStreamReader):
-    """Partitioned reader for ``from_process_pool``: N worker commands,
-    each spooling stdout to its own durable log; every micro-batch plans
-    one (worker, line range) slice per log and the slices are read IN
-    EXECUTOR TASKS — the scale-out form of the driver-side
-    ``_ProcessStreamReader`` (N workers → N-way read parallelism, the
-    same shape the kafka source gives topic partitions).
-
-    Offsets are ``{worker_index: committed_line_count}``; a restarted
-    query replays exact committed slices from the logs. The worker
-    processes themselves live on the driver (they are the *ingest*
-    edge); the decode/parse cost is what scales out.
-    """
-
-    def __init__(self, spool_dir: str, cmds_json: str, batch_size: int):
-        self._dir = spool_dir
-        self._cmds = json.loads(cmds_json) if cmds_json else []
-        self._bs = batch_size
-        self._procs: list | None = None
-
-    def _log(self, i: int) -> str:
-        import os
-
-        return os.path.join(self._dir, f"w{i:03d}.log")
-
-    def _ensure_started(self) -> None:
-        import os
-        import subprocess
-
-        if self._procs is not None:
-            return
-        os.makedirs(self._dir, exist_ok=True)
-        self._procs = []
-        for i, cmd in enumerate(self._cmds):
-            out = open(self._log(i), "ab")
-            self._procs.append(
-                subprocess.Popen(cmd, stdout=out, stderr=subprocess.DEVNULL)
-            )
-
-    def _n_workers(self) -> int:
-        import glob as g
-        import os
-
-        n_logs = len(g.glob(os.path.join(self._dir, "w*.log")))
-        return max(len(self._cmds), n_logs)
-
-    def initialOffset(self) -> dict:
-        return {str(i): 0 for i in range(self._n_workers())}
-
-    def latestOffset(self) -> dict:
-        import os
-
-        self._ensure_started()
-        prev = getattr(self, "_last_offered", None) or self.initialOffset()
-        out = {}
-        for i in range(self._n_workers()):
-            path = self._log(i)
-            n = 0
-            if os.path.exists(path):
-                with open(path, "rb") as f:
-                    data = f.read()
-                n = data.count(b"\n")  # committed = newline-terminated
-            # admission control: at most batch_size new lines per worker
-            # per trigger, so one chatty worker can't starve a micro-batch
-            base = prev.get(str(i), 0)
-            out[str(i)] = min(n, base + self._bs)
-        self._last_offered = out
-        return out
-
-    def partitions(self, start: dict, end: dict):
-        return [
-            _WorkerSlice(int(key), self._log(int(key)), start.get(key, 0), hi)
-            for key, hi in end.items()
-            if hi > start.get(key, 0)
-        ]
-
-    def read(self, partition: _WorkerSlice):
-        # executor-side: decode exactly the committed slice of one log
-        s = partition
-        with open(s.path, "rb") as f:
-            lines = f.read().decode("utf-8", errors="replace").split("\n")[:-1]
-        return iter(
-            [(s.worker, j, v) for j, v in enumerate(lines[s.start : s.end], s.start)]
-        )
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def stop(self) -> None:
-        for p in self._procs or []:
-            if p.poll() is None:
-                p.terminate()
-
-
 class ProcessPoolDataSource(DataSource):
     """``format("process_pool_stream")``: options ``spool_dir``, ``cmds``
     (JSON list of argv lists; empty to tail logs another writer owns) and
-    ``batch_size``."""
+    ``batch_size`` (lines per trigger across all workers)."""
 
     @classmethod
     def name(cls) -> str:
@@ -298,11 +167,14 @@ class ProcessPoolDataSource(DataSource):
     def schema(self) -> str:
         return "worker int, line_no long, value string"
 
-    def streamReader(self, schema) -> _ProcessPoolStreamReader:
-        return _ProcessPoolStreamReader(
-            self.options["spool_dir"],
-            self.options.get("cmds", ""),
+    def streamReader(self, schema) -> SpoolStreamReader:
+        d = self.options["spool_dir"]
+        cmds = json.loads(self.options.get("cmds") or "[]")
+        return SpoolStreamReader(
+            {"lines": os.path.join(glob.escape(d), "w*.log")},
+            _worker_row,
             int(self.options.get("batch_size", "1000")),
+            cmds=[(c, os.path.join(d, f"w{i:03d}.log")) for i, c in enumerate(cmds)],
         )
 
 
@@ -313,10 +185,12 @@ def from_process_pool(
     batch_size: int = 1000,
 ) -> DataFrame:
     """Streaming DataFrame over N worker subprocesses, one durable log
-    and one *read partition* per worker: columns ``(worker int, line_no
-    long, value string)``. The partitioned counterpart of
-    ``from_process_stream`` — use it when the parse/transform after
-    ingest should fan out across the cluster."""
+    (``w{i:03d}.log``) and one read partition per worker: columns
+    ``(worker int, line_no long, value string)``. ``batch_size`` caps the
+    lines per trigger across all workers, split in proportion to each
+    worker's backlog so a chatty worker cannot starve the others. The
+    partitioned counterpart of ``from_process_stream`` — use it when the
+    parse/transform after ingest should fan out across the cluster."""
     spark.dataSource.register(ProcessPoolDataSource)
     return (
         spark.readStream.format("process_pool_stream")
@@ -327,7 +201,9 @@ def from_process_pool(
     )
 
 
-_HTTP_SERVERS: dict[int, tuple[object, str]] = {}
+#: port -> (endpoint kind, spool) of every endpoint started in this process.
+_SERVERS: dict[int, tuple[str, str]] = {}
+_SPOOL_LOCK = threading.Lock()
 
 #: Per-port count of malformed/unservable requests the ingest endpoints
 #: refused (bad Content-Length, unreadable body). A source that silently
@@ -336,24 +212,92 @@ _HTTP_SERVERS: dict[int, tuple[object, str]] = {}
 SOURCE_DROPS: dict[int, int] = {}
 
 
-def _check_port_spool(
-    cache: dict[int, tuple[object, str]], port: int, spool: str, kind: str
-) -> bool:
-    """True if a server for ``port`` already exists (after verifying it
-    writes to the same ``spool``). The daemon's handler captures the
-    first call's spool in its closure, so reusing the port with a
-    different spool would silently append to the old file while the new
-    stream reads an empty one — refuse loudly instead."""
-    if port in cache:
-        _, bound = cache[port]
-        if bound != spool:
+def _append_lines(spool: str, lines: list[str]) -> None:
+    """Append the non-empty ``lines`` to ``spool``, each newline-
+    terminated, under one lock — the spool write every endpoint makes
+    before it acknowledges."""
+    os.makedirs(os.path.dirname(spool) or ".", exist_ok=True)
+    with _SPOOL_LOCK, open(spool, "a", encoding="utf-8") as f:
+        for ln in lines:
+            if ln:
+                f.write(ln + "\n")
+
+
+def _recv_exact(conn, n: int) -> bytes | None:
+    """Exactly ``n`` bytes from ``conn``, or None at EOF."""
+    buf = b""
+    while len(buf) < n:
+        chunk = conn.recv(n - len(buf))
+        if not chunk:
+            return None
+        buf += chunk
+    return buf
+
+
+def _serve(kind: str, port: int, spool: str, serve_conn) -> None:
+    """Start, once per port, a driver-side daemon accept loop on
+    127.0.0.1:``port`` that runs ``serve_conn(conn, port, spool)`` on a
+    thread per connection. A connection handler captures its spool, so
+    reusing a port with a different spool would append to the old file
+    while the new stream reads an empty one — refuse loudly instead."""
+    if port in _SERVERS:
+        if _SERVERS[port] != (kind, spool):
+            bound_kind, bound = _SERVERS[port]
             raise ValueError(
-                f"{kind} server on port {port} is already spooling to "
+                f"{bound_kind} server on port {port} is already spooling to "
                 f"{bound!r}; pass the same spool or use a fresh port "
                 f"(one durable log per endpoint)."
             )
-        return True
-    return False
+        return
+    srv = socket.create_server(("127.0.0.1", port))
+
+    def handle(conn) -> None:
+        with conn:
+            serve_conn(conn, port, spool)
+
+    def accept_loop() -> None:
+        while True:
+            try:
+                conn, _ = srv.accept()
+            except OSError:  # listener closed
+                return
+            threading.Thread(target=handle, args=(conn,), daemon=True).start()
+
+    threading.Thread(target=accept_loop, daemon=True).start()
+    _SERVERS[port] = (kind, spool)
+
+
+class _HttpHandler(BaseHTTPRequestHandler):
+    """One POST per connection; ``server`` is ``(port, spool)``."""
+
+    def do_POST(self):  # noqa: N802 (http.server API name)
+        port, spool = self.server
+        try:
+            n = int(self.headers.get("Content-Length", 0))
+            body = self.rfile.read(n).decode("utf-8", errors="replace")
+        except (ValueError, OSError) as exc:
+            # Malformed request: refuse with 400 and COUNT the drop —
+            # never ack (200) data that didn't reach the durable spool.
+            SOURCE_DROPS[port] += 1
+            logging.getLogger(__name__).debug(
+                "from_http_server port %d dropped request: %s", port, exc
+            )
+            try:
+                self.send_response(400)
+                self.end_headers()
+            except OSError:
+                pass  # client already gone; the drop is counted
+            return
+        _append_lines(spool, body.split("\n"))
+        self.send_response(200)
+        self.end_headers()
+
+    def log_message(self, *a):  # silence per-request stderr noise
+        pass
+
+
+def _serve_http(conn, port: int, spool: str) -> None:
+    _HttpHandler(conn, ("127.0.0.1", 0), (port, spool))
 
 
 def from_http_server(
@@ -364,78 +308,28 @@ def from_http_server(
 ) -> DataFrame:
     """Streaming DataFrame of lines POSTed to a local HTTP endpoint
     (reference ``from_http_server``): columns ``(line_no long,
-    value string)``.
+    value string)``, at most ``batch_size`` lines per trigger.
 
     Same durable-log design as ``from_process_stream``: the handler
-    appends newline-terminated lines to the spool under a lock, and the
-    stream reader indexes committed lines by offset — so acknowledged
-    POSTs survive query restarts exactly-once, which a socket buffer
-    cannot promise. The server is a driver-side daemon thread (one per
-    port, reused across calls); production ingestion belongs on
-    file/kafka paths, this is the reference's dev-ingest parity.
+    appends newline-terminated lines to the spool before it answers 200,
+    and the stream reader indexes committed lines by offset — so
+    acknowledged POSTs survive query restarts exactly-once, which a
+    socket buffer cannot promise. The server is a driver-side daemon
+    thread (one per port, reused across calls); production ingestion
+    belongs on file/kafka paths, this is the reference's dev-ingest
+    parity.
     """
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    if not _check_port_spool(_HTTP_SERVERS, port, spool, "from_http_server"):
-        lock = threading.Lock()
-        SOURCE_DROPS.setdefault(port, 0)
-
-        class _Handler(BaseHTTPRequestHandler):
-            def do_POST(self):  # noqa: N802 (http.server API name)
-                try:
-                    n = int(self.headers.get("Content-Length", 0))
-                    body = self.rfile.read(n).decode("utf-8", errors="replace")
-                except (ValueError, OSError) as exc:
-                    # Malformed request: refuse with 400 and COUNT the
-                    # drop — never ack (200) data that didn't reach the
-                    # durable spool.
-                    SOURCE_DROPS[port] += 1
-                    logging.getLogger(__name__).debug(
-                        "from_http_server port %d dropped request: %s", port, exc
-                    )
-                    try:
-                        self.send_response(400)
-                        self.end_headers()
-                    except OSError:
-                        pass  # client already gone; the drop is counted
-                    return
-                lines = [ln for ln in body.split("\n") if ln]
-                import os
-
-                os.makedirs(os.path.dirname(spool) or ".", exist_ok=True)
-                with lock, open(spool, "a", encoding="utf-8") as f:
-                    for ln in lines:
-                        f.write(ln + "\n")
-                self.send_response(200)
-                self.end_headers()
-
-            def log_message(self, *a):  # silence per-request stderr noise
-                pass
-
-        srv = ThreadingHTTPServer(("127.0.0.1", port), _Handler)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        _HTTP_SERVERS[port] = (srv, spool)
-
-    spark.dataSource.register(ProcessDataSource)
-    return (
-        spark.readStream.format("process_stream")
-        .option("spool", spool)
-        .option("batch_size", str(batch_size))
-        .load()
-    )
+    SOURCE_DROPS.setdefault(port, 0)
+    _serve("from_http_server", port, spool, _serve_http)
+    return from_process_stream(spark, [], spool, batch_size)
 
 
-_WS_SERVERS: dict[int, tuple[object, str]] = {}
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"  # RFC 6455 §1.3
 
 
 def _ws_handshake(conn) -> bool:
     """Read the client's HTTP upgrade request and answer 101 with the
     RFC 6455 accept key. Returns False on a malformed request."""
-    import base64
-    import hashlib
-
     data = b""
     while b"\r\n\r\n" not in data:
         chunk = conn.recv(4096)
@@ -462,38 +356,39 @@ def _ws_handshake(conn) -> bool:
 def _ws_read_frame(conn):
     """Parse one client frame → (opcode, payload bytes) or None on EOF.
     Client frames are always masked (RFC 6455 §5.1)."""
-
-    def recv_exact(n: int) -> bytes | None:
-        buf = b""
-        while len(buf) < n:
-            chunk = conn.recv(n - len(buf))
-            if not chunk:
-                return None
-            buf += chunk
-        return buf
-
-    hdr = recv_exact(2)
+    hdr = _recv_exact(conn, 2)
     if hdr is None:
         return None
     opcode = hdr[0] & 0x0F
     masked, ln = hdr[1] & 0x80, hdr[1] & 0x7F
-    if ln == 126:
-        ext = recv_exact(2)
+    if ln in (126, 127):
+        ext = _recv_exact(conn, 2 if ln == 126 else 8)
         if ext is None:
             return None
         ln = int.from_bytes(ext, "big")
-    elif ln == 127:
-        ext = recv_exact(8)
-        if ext is None:
-            return None
-        ln = int.from_bytes(ext, "big")
-    mask = recv_exact(4) if masked else b"\x00" * 4
-    if mask is None:
-        return None
-    payload = recv_exact(ln) if ln else b""
-    if payload is None:
+    mask = _recv_exact(conn, 4) if masked else b"\x00" * 4
+    payload = _recv_exact(conn, ln) if ln else b""
+    if mask is None or payload is None:
         return None
     return opcode, bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+
+
+def _serve_ws(conn, port: int, spool: str) -> None:
+    if not _ws_handshake(conn):
+        return
+    while True:
+        frame = _ws_read_frame(conn)
+        if frame is None:
+            return
+        opcode, payload = frame
+        if opcode == 0x8:  # close: echo and finish
+            conn.sendall(b"\x88\x00")
+            return
+        if opcode == 0x9:  # ping -> pong, unmasked server frame
+            conn.sendall(bytes([0x8A, len(payload)]) + payload)
+            continue
+        if opcode in (0x1, 0x0):  # text / continuation
+            _append_lines(spool, payload.decode("utf-8", errors="replace").split("\n"))
 
 
 def from_websocket(
@@ -504,107 +399,67 @@ def from_websocket(
 ) -> DataFrame:
     """Streaming DataFrame of text messages sent to a local WebSocket
     endpoint (reference ``from_websocket``): columns ``(line_no long,
-    value string)``.
+    value string)``, at most ``batch_size`` lines per trigger.
 
     The server is a stdlib RFC 6455 implementation (handshake accept
     key, masked client frames, close/ping control frames) running as a
     driver-side daemon thread — the same durable-spool design as
-    ``from_http_server``: each text message appends one newline-
-    terminated line under a lock, and the stream reader's line offsets
-    make acknowledged messages replayable exactly-once across restarts.
+    ``from_http_server``: each text message appends newline-terminated
+    lines to the spool, and the stream reader's line offsets make
+    acknowledged messages replayable exactly-once across restarts.
     Newlines inside a message are message separators, matching the
     line-oriented schema shared by the process/http/socket sources.
     """
-    import socket
-    import threading
-
-    if not _check_port_spool(_WS_SERVERS, port, spool, "from_websocket"):
-        lock = threading.Lock()
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", port))
-        srv.listen()
-
-        def spool_lines(text: str) -> None:
-            import os
-
-            lines = [ln for ln in text.split("\n") if ln]
-            os.makedirs(os.path.dirname(spool) or ".", exist_ok=True)
-            with lock, open(spool, "a", encoding="utf-8") as f:
-                for ln in lines:
-                    f.write(ln + "\n")
-
-        def serve_conn(conn) -> None:
-            with conn:
-                if not _ws_handshake(conn):
-                    return
-                while True:
-                    frame = _ws_read_frame(conn)
-                    if frame is None:
-                        return
-                    opcode, payload = frame
-                    if opcode == 0x8:  # close: echo and finish
-                        conn.sendall(b"\x88\x00")
-                        return
-                    if opcode == 0x9:  # ping -> pong, unmasked server frame
-                        conn.sendall(bytes([0x8A, len(payload)]) + payload)
-                        continue
-                    if opcode in (0x1, 0x0):  # text / continuation
-                        spool_lines(payload.decode("utf-8", errors="replace"))
-
-        def accept_loop() -> None:
-            while True:
-                try:
-                    conn, _ = srv.accept()
-                except OSError:  # listener closed
-                    return
-                threading.Thread(target=serve_conn, args=(conn,), daemon=True).start()
-
-        threading.Thread(target=accept_loop, daemon=True).start()
-        _WS_SERVERS[port] = (srv, spool)
-
-    spark.dataSource.register(ProcessDataSource)
-    return (
-        spark.readStream.format("process_stream")
-        .option("spool", spool)
-        .option("batch_size", str(batch_size))
-        .load()
-    )
-
-
-_MQTT_SERVERS: dict[int, tuple[object, str]] = {}
+    _serve("from_websocket", port, spool, _serve_ws)
+    return from_process_stream(spark, [], spool, batch_size)
 
 
 def _mqtt_read_packet(conn):
     """Read one MQTT control packet → (type, flags, body) or None on EOF.
     Remaining-length is the spec's 7-bit varint (§2.2.3)."""
-
-    def recv_exact(n: int) -> bytes | None:
-        buf = b""
-        while len(buf) < n:
-            chunk = conn.recv(n - len(buf))
-            if not chunk:
-                return None
-            buf += chunk
-        return buf
-
-    hdr = recv_exact(1)
+    hdr = _recv_exact(conn, 1)
     if hdr is None:
         return None
     ptype, flags = hdr[0] >> 4, hdr[0] & 0x0F
     ln, shift = 0, 0
     for _ in range(4):
-        b = recv_exact(1)
+        b = _recv_exact(conn, 1)
         if b is None:
             return None
         ln |= (b[0] & 0x7F) << shift
         if not b[0] & 0x80:
             break
         shift += 7
-    body = recv_exact(ln) if ln else b""
+    body = _recv_exact(conn, ln) if ln else b""
     if body is None:
         return None
     return ptype, flags, body
+
+
+def _serve_mqtt(conn, port: int, spool: str) -> None:
+    while True:
+        pkt = _mqtt_read_packet(conn)
+        if pkt is None:
+            return
+        ptype, flags, body = pkt
+        if ptype == 1:  # CONNECT -> CONNACK (session 0, rc 0)
+            conn.sendall(b"\x20\x02\x00\x00")
+        elif ptype == 3:  # PUBLISH
+            qos = (flags >> 1) & 0x3
+            tlen = int.from_bytes(body[:2], "big")
+            topic = body[2 : 2 + tlen].decode("utf-8", "replace")
+            rest = body[2 + tlen :]
+            pkt_id = rest[:2] if qos else b""
+            payload = (rest[2:] if qos else rest).decode("utf-8", "replace")
+            _append_lines(spool, [topic + "\t" + payload.replace("\n", " ")])
+            if qos == 1:  # durable first, then PUBACK
+                conn.sendall(b"\x40\x02" + pkt_id)
+        elif ptype == 8:  # SUBSCRIBE -> SUBACK (maxQoS 0)
+            conn.sendall(b"\x90\x03" + body[:2] + b"\x00")
+        elif ptype == 12:  # PINGREQ -> PINGRESP
+            conn.sendall(b"\xd0\x00")
+        elif ptype == 14:  # DISCONNECT
+            return
 
 
 def from_mqtt(
@@ -615,7 +470,8 @@ def from_mqtt(
 ) -> DataFrame:
     """Streaming DataFrame of messages PUBLISHed to a local MQTT 3.1.1
     endpoint (reference ``from_mqtt``): columns ``(line_no long,
-    value string)`` where value is ``topic<TAB>payload``.
+    value string)`` where value is ``topic<TAB>payload``, at most
+    ``batch_size`` lines per trigger.
 
     A broker-less stdlib endpoint speaking the server half of MQTT
     3.1.1: CONNECT→CONNACK, SUBSCRIBE→SUBACK, PINGREQ→PINGRESP,
@@ -626,65 +482,5 @@ def from_mqtt(
     deployment points from_kafka/file paths at a production broker —
     this is the reference's dev-ingest parity surface.
     """
-    import socket
-    import threading
-
-    if not _check_port_spool(_MQTT_SERVERS, port, spool, "from_mqtt"):
-        lock = threading.Lock()
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", port))
-        srv.listen()
-
-        def spool_line(topic: str, payload: str) -> None:
-            import os
-
-            os.makedirs(os.path.dirname(spool) or ".", exist_ok=True)
-            line = topic + "\t" + payload.replace("\n", " ")
-            with lock, open(spool, "a", encoding="utf-8") as f:
-                f.write(line + "\n")
-
-        def serve_conn(conn) -> None:
-            with conn:
-                while True:
-                    pkt = _mqtt_read_packet(conn)
-                    if pkt is None:
-                        return
-                    ptype, flags, body = pkt
-                    if ptype == 1:  # CONNECT -> CONNACK (session 0, rc 0)
-                        conn.sendall(b"\x20\x02\x00\x00")
-                    elif ptype == 3:  # PUBLISH
-                        qos = (flags >> 1) & 0x3
-                        tlen = int.from_bytes(body[:2], "big")
-                        topic = body[2 : 2 + tlen].decode("utf-8", "replace")
-                        rest = body[2 + tlen :]
-                        pkt_id = rest[:2] if qos else b""
-                        payload = rest[2:] if qos else rest
-                        spool_line(topic, payload.decode("utf-8", "replace"))
-                        if qos == 1:  # durable first, then PUBACK
-                            conn.sendall(b"\x40\x02" + pkt_id)
-                    elif ptype == 8:  # SUBSCRIBE -> SUBACK (maxQoS 0)
-                        conn.sendall(b"\x90\x03" + body[:2] + b"\x00")
-                    elif ptype == 12:  # PINGREQ -> PINGRESP
-                        conn.sendall(b"\xd0\x00")
-                    elif ptype == 14:  # DISCONNECT
-                        return
-
-        def accept_loop() -> None:
-            while True:
-                try:
-                    conn, _ = srv.accept()
-                except OSError:
-                    return
-                threading.Thread(target=serve_conn, args=(conn,), daemon=True).start()
-
-        threading.Thread(target=accept_loop, daemon=True).start()
-        _MQTT_SERVERS[port] = (srv, spool)
-
-    spark.dataSource.register(ProcessDataSource)
-    return (
-        spark.readStream.format("process_stream")
-        .option("spool", spool)
-        .option("batch_size", str(batch_size))
-        .load()
-    )
+    _serve("from_mqtt", port, spool, _serve_mqtt)
+    return from_process_stream(spark, [], spool, batch_size)

@@ -302,7 +302,6 @@ def run_stream_to_df(
     key_cols: list[str] | None = None,
     trigger: str = "available_now",
     state_partitions: int | None = None,
-    final_batch_id: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) and return
     the final state as a *batch* DataFrame.
@@ -327,11 +326,6 @@ def run_stream_to_df(
     for identical results (state here is ~100 window×type groups). At
     real scale pick ~(state size / ~100 MB) partitions; the conf is
     restored after the run either way.
-
-    ``final_batch_id``: retained for API compatibility, now a no-op.
-    The r5 noop fast path existed to skip k-1 redundant complete-mode
-    full-state parquet rewrites; the r7 native memory sink (below) never
-    writes parquet at all, so there is nothing left to skip.
 
     Sink selection (round 7, VERDICT r6 item 5): ``complete`` and
     ``append`` run through JVM-NATIVE sinks (the in-memory snapshot sink
@@ -370,11 +364,9 @@ def run_stream_to_df(
     if output_mode == "complete":
         # JVM-native snapshot sink: every trigger truncate+inserts the
         # current full state into a driver-side in-memory table; no
-        # Python callback, no parquet rewrites, and the final_batch_id
-        # fast-path bookkeeping is moot (nothing redundant is written
-        # beyond the small state itself). Supersedes the r5 noop fast
-        # path AND its loud-failure guard: the last trigger's snapshot
-        # IS the table, there is no "skipped final write" hazard.
+        # Python callback and no parquet rewrites. The last trigger's
+        # snapshot IS the table, so there is no "skipped final write"
+        # hazard.
         mem_name = f"replay_mem_{uuid.uuid4().hex[:8]}"
         w = (
             stream_df.writeStream.outputMode("complete")

@@ -525,3 +525,92 @@ def test_from_mqtt_real_source(spark, tmp_path):
         ).collect()
     got = [r["value"] for r in sorted(rows, key=lambda r: r["line_no"])]
     assert got == [f"t/a\tm{i}" for i in range(6)] + ["t/b\tqos1-msg"]
+
+
+def _read_trigger(reader, start: dict, end: dict) -> list[tuple]:
+    """One trigger's rows, read the way Spark does: plan the slices on
+    the driver, then read each slice as its own task."""
+    return [row for part in reader.partitions(start, end) for row in reader.read(part)]
+
+
+def test_spool_cap_split_does_not_starve_partitions(tmp_path):
+    """maxOffsetsPerTrigger is split across partition logs by backlog: a
+    partition whose backlog stays above the cap must not stop the others
+    from advancing, a capped trigger offers exactly the cap, and a drain
+    delivers every record exactly once."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from pandas_streaming_spark.sources.kafka_spool import (
+        KafkaSpoolDataSource,
+        produce,
+    )
+
+    d = str(tmp_path / "broker")
+    recs = [(b"a", f"a{i}".encode(), 0) for i in range(100)]
+    recs += [(b"b", f"b{i}".encode(), 0) for i in range(10)]
+    produce(d, "t", recs, n_partitions=2, partition_of=lambda k, v: k == b"b")
+    reader = KafkaSpoolDataSource(CaseInsensitiveDict({
+        "kafka.bootstrap.servers": "spool://" + d,
+        "subscribe": "t",
+        "maxOffsetsPerTrigger": "10",
+    })).streamReader(None)
+
+    start = reader.initialOffset()
+    end = reader.latestOffset()
+    first = _read_trigger(reader, start, end)
+    assert len(first) == 10
+    assert {r[3] for r in first} == {0, 1}  # both partitions advanced
+
+    got = [bytes(r[1]).decode() for r in first]
+    while end != start:
+        start, end = end, reader.latestOffset()
+        batch = _read_trigger(reader, start, end)
+        assert len(batch) <= 10
+        got += [bytes(r[1]).decode() for r in batch]
+    assert sorted(got) == sorted(bytes(v).decode() for _, v, _ in recs)
+
+
+def test_spool_unfinished_line_is_not_committed(tmp_path):
+    """A log's last line counts only once it is newline-terminated: while
+    it is unfinished the reader's offsets exclude it, and the trigger
+    after it is finished delivers it exactly once."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from pandas_streaming_spark.sources.pystream import ProcessDataSource
+
+    spool = tmp_path / "lines.log"
+    spool.write_bytes(b"a\nb\npart")
+    reader = ProcessDataSource(CaseInsensitiveDict({"spool": str(spool)})).streamReader(None)
+
+    start = reader.initialOffset()
+    end = reader.latestOffset()
+    assert end == {"lines": {"lines.log": 2}}
+    assert _read_trigger(reader, start, end) == [(0, "a"), (1, "b")]
+    assert reader.latestOffset() == end  # still unfinished: nothing new
+
+    with open(spool, "ab") as f:
+        f.write(b"ial\n")
+    start, end = end, reader.latestOffset()
+    assert end == {"lines": {"lines.log": 3}}
+    assert _read_trigger(reader, start, end) == [(2, "partial")]
+    start, end = end, reader.latestOffset()
+    assert end == start and _read_trigger(reader, start, end) == []
+
+
+def test_spool_cap_split_rule():
+    """The per-trigger cap split: everything while the backlog fits;
+    otherwise exactly the cap, every backlogged log at least one record
+    while the cap lasts, and no log given more than its backlog."""
+    from pandas_streaming_spark.sources.kafka_spool import _split_cap
+
+    assert _split_cap(10, [3, 0, 4]) == [3, 0, 4]
+    assert _split_cap(10, [100, 10]) == [9, 1]
+    assert _split_cap(50_000, [62_500] * 4) == [12_500] * 4
+    assert _split_cap(2, [5, 5, 5]) == [1, 1, 0]
+    for cap, backlogs in [(7, [1, 1000, 3, 0, 2]), (100, [99, 1, 1, 1]),
+                          (5, [2, 2, 2]), (1, [0, 9])]:
+        take = _split_cap(cap, backlogs)
+        assert sum(take) == cap
+        assert all(0 <= t <= b for t, b in zip(take, backlogs))
+        if cap >= sum(1 for b in backlogs if b):
+            assert all(t >= 1 for t, b in zip(take, backlogs) if b)

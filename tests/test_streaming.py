@@ -351,19 +351,17 @@ def test_funnel_stream_split_invariance(spark, sf_dir, k):
     assert got == batch
 
 
-def test_complete_mode_ignores_wrong_final_batch_id(spark, sf_dir):
-    """ADVICE r6 item 2 (superseded by the r7 native memory sink): the
-    old foreachBatch noop fast path could skip the final snapshot when
-    final_batch_id overestimated the real batch count; the memory sink
-    writes EVERY trigger's snapshot, so a wrong hint must be harmless —
-    the final state matches the batch answer regardless."""
+def test_complete_mode_final_snapshot_matches_batch(spark, sf_dir):
+    """The complete-mode memory sink writes EVERY trigger's snapshot, so
+    the final state of a multi-batch replay matches the batch answer —
+    no trigger's write may be skipped."""
     from pandas_streaming_spark.catalog import load_table
     from pandas_streaming_spark.streaming.replay import run_stream_to_df
 
     replay_dir = write_replay_batches(spark, sf_dir, 3)  # batch ids 0..2
     stream = replay_events(spark, sf_dir, replay_dir)
     agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    out = run_stream_to_df(spark, agg, "complete", final_batch_id=99)
+    out = run_stream_to_df(spark, agg, "complete")
     expected = {
         (r["event_type"], r["n"])
         for r in load_table(spark, sf_dir, "events")
